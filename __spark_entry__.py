@@ -475,6 +475,21 @@ _REVERIFY_FIRST: tuple[str, ...] = (
     "rel_bucketed_join_agg",
     "text_bpe_merges",
     "text_bpe_tokenize",
+    # late-r13 finished-table memo rewrites and their consumers
+    "sim_topk_brute",
+    "sim_quantized_recall",
+    "sim_lsh_recall_report",
+    "sim_query_margin",
+    "sim_ann_ndcg",
+    "sim_matryoshka_eval",
+    "sim_ivf_nprobe_profile",
+    "text_repetition",
+    "dedup_corpus_keep",
+    "dedup_corpus_keep_mm",
+    "pipe_corpus_health",
+    "pipe_training_corpus",
+    "pipe_keep_attribution",
+    "dedup_method_agreement",
 )
 
 

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.cleaning import clean_text, clean_text_sql, explode_tokens, nonempty
-from ..sources.tables import load_table
+from ..sources.tables import clear_catalog, load_table
 
 # --- Spark side -----------------------------------------------------------
 
@@ -35,8 +35,10 @@ def register_cache(d: dict) -> dict:
 
 def clear_caches(sf_dir: str | None = None) -> None:
     """Unpersist and drop memoized DataFrames — all of them, or only
-    the entries for one ``sf_dir``.  Call when a dataset is retired so
-    executor storage memory is released."""
+    the entries for one ``sf_dir`` — and the matching parquet schema
+    catalog entries.  Call when a dataset is retired so executor
+    storage memory is released."""
+    clear_catalog(sf_dir)
     for d in _CACHE_REGISTRY:
         for key in list(d):
             if sf_dir is not None and key[1] != sf_dir:

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_fingerprint
+from ..sources.tables import read_parquet
 
 DEDUP_WATERMARK = "10 minutes"
 
@@ -32,7 +33,7 @@ def dedup_stream(spark: SparkSession, docs_dir: str) -> DataFrame:
     """First-seen documents from a parquet landing zone: (doc_id,
     fingerprint, text), later exact-content duplicates dropped within
     the watermark horizon."""
-    schema = spark.read.parquet(docs_dir).schema
+    schema = read_parquet(spark, docs_dir).schema
     stream = spark.readStream.schema(schema).parquet(docs_dir)
     return (
         stream.select(

@@ -18,11 +18,10 @@ twin, proven equal on the same files by tests/test_stream_enrich.py.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import load_table, read_parquet
 from .windowed import load_events
 
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
@@ -30,7 +29,7 @@ _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 def _dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        spark.read.parquet(os.path.join(sf_dir, "customer.parquet"))
+        load_table(spark, sf_dir, "customer")
         .select(
             F.col("c_custkey").alias("user_id"),
             F.col("c_mktsegment").alias("mktsegment"),
@@ -61,7 +60,7 @@ def enrich_stream(
     customer read is a plain batch DataFrame — Spark picks it up
     fresh each micro-batch (slowly-changing dims update for free)."""
     spark.conf.set(_NANOS_CONF, "true")
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet(spark, events_dir).schema
     stream = spark.readStream.schema(schema).parquet(events_dir)
     return _project(stream, _dim(spark, sf_dir))
 

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_parquet
 from .windowed import WATERMARK, event_ts_col, load_events
 
 ATTRIB_SEC = 1800  # purchase counts for a view seen ≤ 30 min before
@@ -85,7 +86,7 @@ def attribution_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     two topics.  The equality key (user_id) plus the two-sided
     event-time range is what lets Spark bound both state stores."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet(spark, events_dir).schema
 
     def side() -> DataFrame:
         raw = spark.readStream.schema(schema).parquet(events_dir)
@@ -193,7 +194,7 @@ def unconverted_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     State stays bounded exactly as in the inner join; the only cost of
     OUTER is holding left rows until expiry rather than last-match."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet(spark, events_dir).schema
 
     def side() -> DataFrame:
         raw = spark.readStream.schema(schema).parquet(events_dir)

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sources.tables import read_parquet
 from .windowed import epoch_sec_col
 
 OUT_SCHEMA = (
@@ -100,7 +101,7 @@ def latest_state_stream(
     """Streaming latest-per-key view over a parquet landing zone; one
     updated row per key per micro-batch that advances it."""
     spark.conf.set(_NANOS_CONF, "true")
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet(spark, events_dir).schema
     stream = spark.readStream.schema(schema).parquet(events_dir)
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout

@@ -36,6 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sources.tables import read_parquet
+
 OUT_SCHEMA = (
     "user_id LONG, state STRING, valid_from LONG, valid_to LONG"
 )
@@ -123,7 +125,7 @@ def scd2_stream(
     """Streaming closed-interval SCD2 rows from a parquet landing
     zone keyed by user_id."""
     spark.conf.set(_NANOS_CONF, "true")
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet(spark, events_dir).schema
     stream = spark.readStream.schema(schema).parquet(events_dir)
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout

@@ -38,6 +38,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.cleaning import clean_text, explode_tokens, nonempty
 from ..operators import nb
+from ..sources.tables import read_parquet
 
 
 def score_docs(model: DataFrame, stats: dict, docs: DataFrame) -> DataFrame:
@@ -84,7 +85,7 @@ def start_score_stream(
     batches; ``maxFilesPerTrigger`` bounds the per-batch working set.
     """
     model, stats = nb.nb_model(spark, model_sf_dir)
-    schema = spark.read.parquet(docs_dir).schema
+    schema = read_parquet(spark, docs_dir).schema
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)

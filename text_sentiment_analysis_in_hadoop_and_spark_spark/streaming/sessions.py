@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from ..sources.tables import read_parquet
 from .windowed import event_ts_col, load_events
 
 GAP_SEC = 1800
@@ -58,7 +59,7 @@ def sessions_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     merge + watermark state eviction built in).  ``events_dir`` is a
     file landing zone, as in windowed.py."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet(spark, events_dir).schema
     raw = spark.readStream.schema(schema).parquet(events_dir)
     stream = raw.withColumn(
         "event_ts", event_ts_col(raw)

@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sources.tables import read_parquet
+
 OUT_SCHEMA = "event_type STRING, n_events LONG, sum_value DOUBLE"
 STATE_SCHEMA = "n_events LONG, sum_value DOUBLE"
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
@@ -73,7 +75,7 @@ def running_totals_stream(
     parquet landing zone; one updated row per touched key per
     micro-batch."""
     spark.conf.set(_NANOS_CONF, "true")
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet(spark, events_dir).schema
     stream = spark.readStream.schema(schema).parquet(events_dir)
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout

@@ -27,6 +27,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.tables import read_parquet
 from .stateful import _NANOS_CONF, OUT_SCHEMA
 
 _ROCKSDB_PROVIDER = (
@@ -93,7 +94,7 @@ def running_totals_stream_tws(
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
     )
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet(spark, events_dir).schema
     stream = spark.readStream.schema(schema).parquet(events_dir)
     return (
         stream.select("event_type", "value")

@@ -37,13 +37,12 @@ passes its end, so executor state is O(active windows), not O(stream).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.common import register_cache
+from ..sources.tables import load_table, read_parquet
 
 WINDOW = "1 hour"
 WATERMARK = "1 hour"
@@ -84,7 +83,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # epoch_ns — pinned here too so externally-created sessions
     # (the driver's) agree with session.get_spark's contract
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = load_table(spark, sf_dir, "events")
     return ev.withColumn("epoch_sec", epoch_sec_col(ev))
 
 
@@ -113,7 +112,7 @@ def windowed_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     ``unix_timestamp(window.start)`` equals the batch's integer
     bucket because hour windows align to the epoch."""
     spark.conf.set(_NANOS_CONF, "true")
-    schema = spark.read.parquet(events_dir).schema
+    schema = read_parquet(spark, events_dir).schema
     raw = spark.readStream.schema(schema).parquet(events_dir)
     stream = raw.withColumn("event_ts", event_ts_col(raw)).withWatermark(
         "event_ts", WATERMARK

@@ -10,8 +10,11 @@ commitOffsets, latestOffset) and the state-operator metrics — the
 same instrumentation the r12 pyds probe used (BENCH_NOTES r12).
 
 Usage: python tools/stream_phase_probe.py [sf_dir] [laps]
-       python tools/stream_phase_probe.py --parts 8,16,32  # A/B the
-           join probes' state-shuffle partitioning
+       python tools/stream_phase_probe.py [sf_dir] --parts 8,16,32  # A/B
+           the join probes' state-shuffle partitioning
+
+``sf_dir`` defaults to ``$SPARK_GRAFT_SF_DIR`` and must hold
+``events.parquet``; ``laps`` defaults to 3.
 """
 
 from __future__ import annotations
@@ -25,6 +28,8 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+USAGE = "usage: python tools/stream_phase_probe.py [sf_dir] [laps] [--parts P1,P2,...]"
 
 
 def _progress(q) -> list[dict]:
@@ -61,13 +66,29 @@ def main() -> int:
     parts_list = None
     if "--parts" in args:
         i = args.index("--parts")
-        parts_list = [p for p in args[i + 1].split(",")]
+        if i + 1 == len(args):
+            sys.exit(USAGE)
+        parts_list = args[i + 1].split(",")
         del args[i : i + 2]
-    sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.1"
-    laps = int(args[1]) if len(args) > 1 else (int(args[0]) if args and not os.path.isdir(args[0]) else 3)
+    if len(args) > 2:
+        sys.exit(USAGE)
+    from text_sentiment_analysis_in_hadoop_and_spark_spark.sources.tables import (
+        DEFAULT_SF_DIR,
+    )
+
+    sf_dir = args[0] if args else DEFAULT_SF_DIR
+    if not os.path.isfile(os.path.join(sf_dir, "events.parquet")):
+        sys.exit(f"sf_dir {sf_dir!r} has no events.parquet\n{USAGE}")
+    try:
+        laps = int(args[1]) if len(args) > 1 else 3
+    except ValueError:
+        sys.exit(f"laps must be an integer, got {args[1]!r}\n{USAGE}")
 
     from text_sentiment_analysis_in_hadoop_and_spark_spark.session import (
         get_spark,
+    )
+    from text_sentiment_analysis_in_hadoop_and_spark_spark.streaming.benchprobes import (
+        PROBE_PARTS,
     )
     from text_sentiment_analysis_in_hadoop_and_spark_spark.streaming.joins import (
         attribution_stream,
@@ -101,7 +122,7 @@ def main() -> int:
         finally:
             prog = _progress(q)
             q.stop()
-        spark.catalog.dropTempView("probe_attrib")
+            spark.catalog.dropTempView("probe_attrib")
         return prog
 
     def outer_join():
@@ -117,7 +138,7 @@ def main() -> int:
         finally:
             prog = _progress(q)
             q.stop()
-        spark.catalog.dropTempView("probe_unconv")
+            spark.catalog.dropTempView("probe_unconv")
         return prog
 
     def upsert_view():
@@ -174,7 +195,7 @@ def main() -> int:
                         run(name, fn, parts)
             else:
                 for name, fn in join_probes.items():
-                    run(name, fn, "8")  # the bench's probe scale
+                    run(name, fn, PROBE_PARTS)  # the bench's probe scale
                 for name, fn in other_probes.items():
                     run(name, fn, None)
     finally:
